@@ -448,7 +448,8 @@ def main() -> int:
     # touch — the reprobe adjudication must survive to the committed tree
     # (round-11 verdict item 1: the r11 adjudication was lost to a later
     # 8-core run overwriting BENCH_DETAIL.json).
-    for p in _detail_paths(repo_dir, detail_path, cpus):
+    detail_paths = _detail_paths(repo_dir, detail_path, cpus)
+    for p in detail_paths:
         try:
             with open(p, "w") as f:
                 json.dump(detail, f, indent=1)

@@ -5,7 +5,7 @@ capabilities of the reference medallion pipeline (see SURVEY.md):
 
 - layered Parquet data lake (bronze/silver/gold) with partitioned writes
 - cleaning / standardization transforms (casts, normalization, bucketing,
-  struct building, surrogate keys, audit columns)
+  struct building)
 - a declarative, config-driven data-quality rule engine (single-pass)
 - gold-layer analytics aggregations (sales summaries, customer analytics,
   RFM, segmentation, pivots, window ranks, percent-of-total)

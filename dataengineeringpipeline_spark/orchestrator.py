@@ -6,20 +6,28 @@ record, ready-job scan over a dependency DAG, ≤50 iterations, final
 status) and a retry/circuit-breaker error handler
 (``lambda/snowflake_extractor/error_handler.py:31-76,197-377``). In a
 Spark-native engine the control plane is the driver process, so the whole
-thing collapses to a topological execution loop over Python callables —
+thing collapses to a dependency-driven scheduler over Python callables —
 each job a ``dict[str, DataFrame] -> DataFrame`` transform whose laziness
 Spark already manages.
 
-Scale note: orchestration state is O(jobs), never O(rows) — it must stay
-on the driver. What matters at 100 TB is that independent DAG branches
-submit concurrently so the cluster stays busy; ``run`` keeps the
-reference's sequential semantics, and Spark's scheduler overlaps stages
-of the *same* action anyway.
+:meth:`Pipeline.run` hands each job to a thread pool the moment its last
+dependency finishes, so the Spark jobs of independent branches are
+submitted concurrently and overlap on the cluster: a driver submitting
+one action at a time leaves executors idle through every planning and
+py4j gap between them. Each worker labels its Spark jobs with the
+pipeline job's name (job group and description), so the UI and event
+log attribute concurrent work to its pipeline job.
+
+Scale note: orchestration state is O(jobs), never O(rows) — it stays on
+the driver; the pool only overlaps job *submission*, and Spark's
+scheduler shares the executors between the concurrent actions.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from enum import Enum
 from typing import Any, Callable
@@ -227,24 +235,63 @@ class Job:
 
 
 @dataclass
+class _Outcome:
+    """A job's final state as its worker thread leaves it."""
+
+    state: str  # succeeded / quarantined / failed
+    seconds: float
+    result: Any = None
+    error: str | None = None
+    recovery: dict[str, Any] | None = None
+
+
+@contextmanager
+def _spark_job_label(name: str):
+    """Label the Spark jobs this thread submits with the pipeline job's
+    name (job group and description), so the UI and event log attribute
+    concurrent work to its pipeline job; cleared on exit because pool
+    threads are reused. A no-op without an active SparkContext."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        yield
+        return
+    sc.setJobGroup(name, name)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+@dataclass
 class Pipeline:
     """Dependency-DAG pipeline with the reference's execution-record shape.
 
-    ``run`` mirrors the orchestrator loop: repeatedly collect jobs whose
-    dependencies are all satisfied (``get_ready_jobs``,
-    ``lambda_function.py:283-307``), execute them, record per-job status,
-    stop on failure of any job (downstream jobs are marked ``skipped``).
+    ``run`` is dependency-driven: a job is handed to a thread pool the
+    moment its last dependency finishes (the reference's ready-job scan,
+    ``get_ready_jobs``, ``lambda_function.py:283-307``, without its
+    wave barrier), so Spark jobs of independent branches overlap on the
+    cluster. A failed job's dependents are never started and end
+    ``skipped``; its siblings carry on.
 
     With a :class:`RecoveryPolicy` attached, a job failure is classified
     and acted on instead of standing: transient/resource failures are
     re-driven with backoff (bounded), data-quality failures are
     quarantined and their dependents still run, config/auth/permanent
     failures halt the DAG — the reference's alarm-driven recovery loop
-    folded into the driver.
+    folded into the driver. A halt stops scheduling: no job starts after
+    it, jobs already running finish and keep their real status, and
+    every job not started ends ``skipped``.
+
+    Jobs run concurrently, so ``fn`` must not rely on results other than
+    its dependencies' (each job gets a snapshot of the results finished
+    when it was submitted), and per-job ``durations`` may overlap in
+    wall time.
     """
 
     jobs: list[Job] = field(default_factory=list)
-    max_iterations: int = 50
     recovery: RecoveryPolicy | None = None
 
     def add(self, name: str, fn, depends_on: tuple[str, ...] = (), max_retries: int = 0) -> "Pipeline":
@@ -260,6 +307,35 @@ class Pipeline:
             if missing:
                 raise ValueError(f"job {j.name!r} depends on unknown jobs {sorted(missing)}")
 
+    def _execute(self, job: Job, results: dict[str, Any], sleep, clock) -> _Outcome:
+        """Drive one job to its final state (worker thread): retries,
+        then the recovery policy's re-drives and verdict."""
+        attempts = 0
+        recovery = None
+        t0 = clock()
+        with _spark_job_label(job.name):
+            while True:
+                try:
+                    result = execute_with_retry(
+                        lambda: job.fn(results), max_retries=job.max_retries, sleep=sleep
+                    )
+                except Exception as exc:  # noqa: BLE001
+                    error = f"{type(exc).__name__}: {exc}"
+                    if self.recovery is None:
+                        return _Outcome("failed", clock() - t0, error=error)
+                    cls, action = self.recovery.decide(exc, attempts)
+                    recovery = {"error_class": cls.value, "action": action.value, "attempts": attempts}
+                    if action is RecoveryAction.RETRY:
+                        sleep(self.recovery.delay_s(attempts))
+                        attempts += 1
+                        continue  # re-drive; a new failure re-classifies
+                    # SKIP and HALT both leave the job failed
+                    state = "quarantined" if action is RecoveryAction.QUARANTINE else "failed"
+                    return _Outcome(state, clock() - t0, error=error, recovery=recovery)
+                if attempts:  # recovered: not a failure
+                    recovery["recovered"] = True
+                return _Outcome("succeeded", clock() - t0, result, recovery=recovery)
+
     def run(
         self,
         inputs: dict[str, Any] | None = None,
@@ -269,7 +345,10 @@ class Pipeline:
         """Execute the DAG; returns an execution record:
         ``{status, results, job_status, failed, recovery, iterations,
         durations}`` (``durations`` holds per-job wall seconds, retries
-        included — the input :func:`critical_path` consumes).
+        included — the input :func:`critical_path` consumes; with
+        concurrent jobs they overlap). ``iterations`` is the depth of the
+        deepest job started, counted in jobs. Every key comes out in job
+        declaration order, whatever order the jobs finish in.
 
         ``status`` is ``succeeded`` / ``failed``, or ``partial`` when the
         only degradations are quarantined data-quality jobs (the
@@ -277,71 +356,44 @@ class Pipeline:
         ``notification_alerting/lambda_function.py`` status mapping).
         """
         self._validate()
-        results: dict[str, Any] = dict(inputs or {})
-        status: dict[str, str] = {j.name: "pending" for j in self.jobs}
-        failed: dict[str, str] = {}
-        recovery_log: dict[str, dict[str, Any]] = {}
+        #: dependencies not yet satisfied, per job; a quarantined upstream
+        #: satisfies too — its dependents must tolerate the missing result
+        unmet = {j.name: len(set(j.depends_on)) for j in self.jobs}
+        dependents: dict[str, list[Job]] = {j.name: [] for j in self.jobs}
+        for j in self.jobs:
+            for d in set(j.depends_on):
+                dependents[d].append(j)
+        finished = dict(inputs or {})  # the results a newly submitted job sees
+        outcomes: dict[str, _Outcome] = {}
+        depth: dict[str, int] = {}
+        ready = [j for j in self.jobs if not unmet[j.name]]
         halted = False
-        #: a quarantined upstream still unblocks dependents — its
-        #: dependents must tolerate the missing result key.
-        satisfied = ("succeeded", "quarantined")
-
-        durations: dict[str, float] = {}
-
-        for iteration in range(1, self.max_iterations + 1):
-            ready = [
-                j
-                for j in self.jobs
-                if status[j.name] == "pending"
-                and all(status.get(d) in satisfied for d in j.depends_on)
-            ]
-            if not ready or halted:
-                break
-            for job in ready:
-                attempts = 0
-                job_t0 = clock()
-                while True:
-                    try:
-                        results[job.name] = execute_with_retry(
-                            lambda job=job: job.fn(results),
-                            max_retries=job.max_retries,
-                            sleep=sleep,
-                        )
-                        status[job.name] = "succeeded"
-                    except Exception as exc:  # noqa: BLE001
-                        failed[job.name] = f"{type(exc).__name__}: {exc}"
-                        if self.recovery is None:
-                            status[job.name] = "failed"
-                            break
-                        cls, action = self.recovery.decide(exc, attempts)
-                        recovery_log[job.name] = {
-                            "error_class": cls.value,
-                            "action": action.value,
-                            "attempts": attempts,
-                        }
-                        if action is RecoveryAction.RETRY:
-                            sleep(self.recovery.delay_s(attempts))
-                            attempts += 1
-                            continue  # re-drive; a new failure re-classifies
-                        if action is RecoveryAction.QUARANTINE:
-                            status[job.name] = "quarantined"
-                        else:  # SKIP and HALT both leave the job failed
-                            status[job.name] = "failed"
-                            halted = action is RecoveryAction.HALT
-                        break
-                    else:
-                        if attempts:
-                            failed.pop(job.name, None)  # recovered: not a failure
-                            recovery_log[job.name]["recovered"] = True
-                        break
-                durations[job.name] = clock() - job_t0
-                if halted:
+        with ThreadPoolExecutor() as pool:
+            running: dict[Future, Job] = {}
+            while True:
+                for job in [] if halted else ready:
+                    depth[job.name] = 1 + max((depth[d] for d in job.depends_on), default=0)
+                    running[pool.submit(self._execute, job, dict(finished), sleep, clock)] = job
+                ready = []
+                if not running:
                     break
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    job = running.pop(fut)
+                    out = outcomes[job.name] = fut.result()
+                    halted |= (out.recovery or {}).get("action") == RecoveryAction.HALT.value
+                    if out.state == "failed":
+                        continue  # its dependents are never started
+                    if out.state == "succeeded":
+                        finished[job.name] = out.result
+                    for dep in dependents[job.name]:
+                        unmet[dep.name] -= 1
+                        if not unmet[dep.name]:
+                            ready.append(dep)
 
-        for j in self.jobs:  # anything still pending is unreachable or halted
-            if status[j.name] == "pending":
-                status[j.name] = "skipped"
-
+        ran = [(j.name, outcomes[j.name]) for j in self.jobs if j.name in outcomes]
+        # anything never started is unreachable or halted
+        status = {j.name: "skipped" for j in self.jobs} | {n: o.state for n, o in ran}
         states = set(status.values())
         if states <= {"succeeded"}:
             overall = "succeeded"
@@ -351,12 +403,12 @@ class Pipeline:
             overall = "failed"
         return {
             "status": overall,
-            "results": results,
+            "results": dict(inputs or {}) | {n: o.result for n, o in ran if o.state == "succeeded"},
             "job_status": status,
-            "failed": failed,
-            "recovery": recovery_log,
-            "iterations": iteration if self.jobs else 0,
-            "durations": durations,
+            "failed": {n: o.error for n, o in ran if o.state != "succeeded"},
+            "recovery": {n: o.recovery for n, o in ran if o.recovery},
+            "iterations": max(depth.values(), default=0),
+            "durations": {n: o.seconds for n, o in ran},
         }
 
 

@@ -11,10 +11,10 @@ A9–A12) Spark-first:
    fixing SURVEY.md §4.2-2: one scan total instead of one scan per rule.
    At 100 TB that's the difference between N full-table scans and 1.
 
-2. **Monitor checks** — the pandas DQ monitor's six checks
+2. **Monitor checks** — the pandas DQ monitor's data checks
    (``lambda/data_quality_monitor/lambda_function.py``) as distributed
    aggregates: null profile, duplicates, range violations, freshness,
-   IQR outliers, schema compliance.
+   IQR outliers.
 
 3. **Quarantine sink** — failed data written to a side path with audit
    columns + JSON report (``:455-496``).
@@ -22,7 +22,7 @@ A9–A12) Spark-first:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -263,29 +263,6 @@ def iqr_outlier_bounds(
         .alias("outlier_count"),
     )
     return counted.withColumn("outlier_pct", F.col("outlier_count") / F.col("total_count") * 100.0)
-
-
-@dataclass
-class SchemaReport:
-    missing_columns: list[str] = field(default_factory=list)
-    extra_columns: list[str] = field(default_factory=list)
-    type_mismatches: dict[str, tuple[str, str]] = field(default_factory=dict)
-    compliant: bool = True
-
-
-def schema_compliance(df: DataFrame, expected_ddl: dict[str, str]) -> SchemaReport:
-    """Declared-schema validation (missing/extra columns, type mismatch —
-    ``data_quality_monitor/lambda_function.py:120-196``). Driver-side
-    metadata comparison; no data scan."""
-    actual = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    missing = sorted(set(expected_ddl) - set(actual))
-    extra = sorted(set(actual) - set(expected_ddl))
-    mismatch = {
-        c: (expected_ddl[c], actual[c])
-        for c in set(expected_ddl) & set(actual)
-        if expected_ddl[c] != actual[c]
-    }
-    return SchemaReport(missing, extra, mismatch, not (missing or mismatch))
 
 
 # ---------------------------------------------------------------------------

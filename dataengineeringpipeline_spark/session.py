@@ -59,6 +59,21 @@ def _ensure_jvm_code_cache(size: str = "2g") -> None:
         os.environ["SPARK_SUBMIT_OPTS"] = f"{opts} -XX:ReservedCodeCacheSize={size}".strip()
 
 
+def default_driver_memory(mem_total_kib: int | None = None) -> str:
+    """Driver heap sized to the host: a quarter of physical memory
+    (``MemTotal`` in ``/proc/meminfo``), clamped to 1-16 GiB. Off Linux,
+    where there is no ``/proc/meminfo``, the 16 GiB ceiling applies."""
+    if mem_total_kib is None:
+        try:
+            with open("/proc/meminfo") as fh:
+                mem_total_kib = next(
+                    int(line.split()[1]) for line in fh if line.startswith("MemTotal")
+                )
+        except OSError:
+            return "16g"
+    return f"{max(1, min(16, mem_total_kib // 4 // 2**20))}g"
+
+
 def get_spark(
     app_name: str = "dataengineeringpipeline-spark",
     cpus: int | None = None,
@@ -71,7 +86,8 @@ def get_spark(
     real cluster this should be sized so each shuffle partition stays in
     the 64–256 MB range at the target data scale (override via
     ``extra_conf`` or Spark submit conf — AQE coalescing makes a generous
-    value cheap).
+    value cheap). ``spark.driver.memory`` is ``$SPARK_GRAFT_DRIVER_MEM``
+    when set, else :func:`default_driver_memory`.
     """
     cpus = cpus or DEFAULT_CPUS
     _ensure_jvm_code_cache()
@@ -79,7 +95,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     for k, v in ENGINE_CONF.items():
         builder = builder.config(k, v)

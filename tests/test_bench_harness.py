@@ -119,3 +119,28 @@ def test_reprobe_child_runs_in_fresh_process(spark, sf_dir):
     assert timings["silver_orders"] > 0
     assert q_errs == {}  # nothing raised; unknown names just skipped
     assert calib and calib["md5_s"] > 0 and calib["arrow_s"] > 0
+
+
+def test_main_ends_with_parsable_head_line(spark, sf_dir, tmp_path, monkeypatch, capsys):
+    """One sweep over a one-query stub: ``main`` returns 0, writes both
+    detail records, and its last stdout line is the head JSON naming the
+    per-round detail file."""
+    import __spark_entry__
+    from dataengineeringpipeline_spark import session
+
+    _write(str(tmp_path / "BENCH_r01.json"), {})  # round -> 2
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(__spark_entry__, "queries", lambda: {"stub": lambda s, d: s.range(3)})
+    monkeypatch.setattr(bench, "_calibrate", lambda s, c: {"md5_s": 1.0, "arrow_s": 1.0})
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    monkeypatch.setenv("SPARK_GRAFT_REPS", "1")
+
+    assert bench.main() == 0
+    head = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert head["detail"] == "BENCH_DETAIL_r02.json"
+    assert set(head["queries"]) == {"stub"} and head["queries_elided"] == 0
+    for name in ("BENCH_DETAIL.json", "BENCH_DETAIL_r02.json"):
+        with open(tmp_path / name) as f:
+            assert json.load(f)["queries"].keys() == {"stub"}

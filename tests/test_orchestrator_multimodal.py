@@ -3,6 +3,11 @@ not covered by the SQL oracle."""
 
 from __future__ import annotations
 
+import gc
+import itertools
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -154,19 +159,40 @@ def test_recovery_retry_bound_degrades_to_skip():
 
 
 def test_recovery_permanent_halts_pipeline():
+    """HALT stops scheduling: a job still running at the halt finishes
+    and keeps its real status, and a job that becomes ready only after
+    the halt is never started (``skipped``), like every dependent of
+    the failed job."""
+    slow_started, bad_failing = threading.Event(), threading.Event()
+
     def corrupt(_):
+        slow_started.wait(10)
+        bad_failing.set()
         raise RuntimeError("segment decode failure")  # unknown → PERMANENT
+
+    def slow(_):
+        slow_started.set()
+        bad_failing.wait(10)
+        time.sleep(0.5)  # still running when the scheduler sees the halt
+        return "done"
 
     ran = []
     p = orchestrator.Pipeline(recovery=orchestrator.RecoveryPolicy())
     p.add("a", lambda r: ran.append("a"))
     p.add("bad", corrupt, depends_on=("a",))
-    p.add("independent", lambda r: ran.append("independent"), depends_on=("a",))
+    p.add("slow", slow, depends_on=("a",))
+    p.add("after_slow", lambda r: ran.append("after_slow"), depends_on=("slow",))
+    p.add("after_bad", lambda r: ran.append("after_bad"), depends_on=("bad",))
     record = p.run(sleep=_no_sleep)
-    assert record["job_status"]["bad"] == "failed"
-    # HALT stops the world: even dependency-satisfied siblings scheduled
-    # after the failure are skipped, unlike the SKIP branch above.
-    assert record["job_status"]["independent"] == "skipped"
+    assert record["job_status"] == {
+        "a": "succeeded",
+        "bad": "failed",
+        "slow": "succeeded",
+        "after_slow": "skipped",
+        "after_bad": "skipped",
+    }
+    assert ran == ["a"]
+    assert record["results"]["slow"] == "done"
     assert record["recovery"]["bad"] == {
         "error_class": "permanent",
         "action": "halt",
@@ -598,6 +624,192 @@ def test_critical_path_tolerates_partial_runs_and_ties():
     from dataengineeringpipeline_spark.orchestrator import Pipeline as P2
 
     assert critical_path(P2(), {"durations": {}})["path"] == []
+
+
+# -- concurrent scheduling ---------------------------------------------------
+
+
+def test_independent_jobs_run_concurrently():
+    """Two jobs with no dependency between them meet at a barrier, which
+    only passes when both are running at once."""
+    barrier = threading.Barrier(2, timeout=10)
+    p = (
+        orchestrator.Pipeline()
+        .add("left", lambda r: barrier.wait())
+        .add("right", lambda r: barrier.wait())
+    )
+    record = p.run()
+    assert record["job_status"] == {"left": "succeeded", "right": "succeeded"}
+    assert sorted(record["results"].values()) == [0, 1]
+
+
+def test_dependent_never_starts_before_its_dependencies_finish():
+    lock = threading.Lock()
+    events = []
+
+    def job(name, delay):
+        def fn(_):
+            with lock:
+                events.append(("start", name))
+            time.sleep(delay)
+            with lock:
+                events.append(("end", name))
+            return name
+
+        return fn
+
+    p = (
+        orchestrator.Pipeline()
+        .add("src_slow", job("src_slow", 0.3))
+        .add("src_fast", job("src_fast", 0.0))
+        .add("left", job("left", 0.05), depends_on=("src_slow",))
+        .add("both", job("both", 0.0), depends_on=("src_slow", "src_fast"))
+        .add("right", job("right", 0.1), depends_on=("src_fast",))
+        .add("sink", job("sink", 0.0), depends_on=("left", "both", "right"))
+    )
+    record = p.run()
+    assert record["status"] == "succeeded"
+    at = {event: i for i, event in enumerate(events)}
+    for j in p.jobs:
+        for dep in j.depends_on:
+            assert at[("end", dep)] < at[("start", j.name)], (dep, j.name, events)
+    # "right" waits only for the fast source: it starts before the slow
+    # source finishes, i.e. there is no wave barrier between levels
+    assert at[("start", "right")] < at[("end", "src_slow")]
+
+
+def test_record_does_not_depend_on_finish_order():
+    def build(delays):
+        def source(name, delay):
+            def fn(_):
+                time.sleep(delay)
+                return name.upper()
+
+            return fn
+
+        def gate(_):
+            raise orchestrator.DataQualityError("null rate over budget")
+
+        p = orchestrator.Pipeline(recovery=orchestrator.RecoveryPolicy())
+        for name, delay in zip("abcd", delays):
+            p.add(name, source(name, delay))
+        p.add("gate", gate, depends_on=("c",))
+        p.add("sink", lambda r: "".join(r.get(k, "-") for k in "abcd"),
+              depends_on=("a", "b", "d", "gate"))
+        return p.run(inputs={"bronze": 0}, sleep=_no_sleep)
+
+    records = [build(d) for d in itertools.islice(
+        itertools.permutations((0.0, 0.02, 0.04, 0.06)), 0, 24, 5)]
+    first = records[0]
+    assert first["job_status"] == {
+        "a": "succeeded", "b": "succeeded", "c": "succeeded", "d": "succeeded",
+        "gate": "quarantined", "sink": "succeeded",
+    }
+    assert first["results"]["sink"] == "ABCD"
+    for rec in records[1:]:
+        for key in ("job_status", "results", "failed", "recovery"):
+            assert list(rec[key].items()) == list(first[key].items()), key
+
+
+def test_random_wide_dag_under_fast_thread_switching():
+    """Stress: 120 jobs over a seeded random DAG, more pool threads than
+    cores, and a very short interpreter switch interval. Every job runs
+    exactly once, after all of its dependencies, and computes the same
+    value a serial evaluation does."""
+    import random
+    import sys
+
+    rng = random.Random(7)
+    deps = {f"j{i}": tuple(sorted({f"j{rng.randrange(i)}" for _ in range(rng.randint(0, 3))}))
+            if i else () for i in range(120)}
+    expect: dict[str, int] = {}
+    for name, ds in deps.items():  # declaration order is topological
+        expect[name] = 1 + sum(expect[d] for d in ds)
+    calls = {name: 0 for name in deps}
+    lock = threading.Lock()
+
+    def job(name):
+        def fn(r):
+            with lock:
+                calls[name] += 1
+            return 1 + sum(r[d] for d in deps[name])
+
+        return fn
+
+    p = orchestrator.Pipeline()
+    for name, ds in deps.items():
+        p.add(name, job(name), depends_on=ds)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        record = p.run()
+    finally:
+        sys.setswitchinterval(interval)
+    assert record["status"] == "succeeded"
+    assert record["results"] == expect
+    assert set(calls.values()) == {1}
+
+
+def test_deep_chain_runs_to_completion():
+    """A DAG deeper than any fixed iteration budget still completes."""
+    p = orchestrator.Pipeline().add("j0", lambda r: 0)
+    for i in range(1, 60):
+        p.add(f"j{i}", lambda r, i=i: r[f"j{i - 1}"] + 1, depends_on=(f"j{i - 1}",))
+    record = p.run()
+    assert record["status"] == "succeeded"
+    assert set(record["job_status"].values()) == {"succeeded"}
+    assert record["results"]["j59"] == 59
+    assert record["iterations"] == 60
+
+
+def test_jobs_label_their_spark_jobs(spark):
+    sc = spark.sparkContext
+    p = orchestrator.Pipeline()
+    for name in ("label.left", "label.right"):
+        p.add(name, lambda r: spark.range(5).count())
+    assert p.run()["status"] == "succeeded"
+    tracker = sc.statusTracker()
+    for name in ("label.left", "label.right"):
+        assert tracker.getJobIdsForGroup(name), name
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_repeated_runs_do_not_leak_py4j_threads(spark):
+    """Each pool thread that calls into Spark pins a JVM thread serving
+    its py4j connection; the connection must close when the run's pool
+    shuts down. Counted as the JVM threads running py4j code: the JVM's
+    total thread count also holds Spark's cached pools (shuffle, block
+    manager, AQE stage executors), which grow with work whether jobs
+    run concurrently or not and idle out after 60 s."""
+    threads = spark._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+
+    def py4j_threads(at_most=None):
+        """The count, once closed connections' JVM threads have exited:
+        a dead Python thread's connection closes when it is collected,
+        and its JVM thread exits when it sees the socket close."""
+        deadline = time.monotonic() + 5
+        while True:
+            gc.collect()
+            n = sum(
+                any("py4j" in frame.getClassName() for frame in t.getStackTrace())
+                for t in threads.dumpAllThreads(False, False)
+            )
+            if at_most is None or n <= at_most or time.monotonic() > deadline:
+                return n
+            time.sleep(0.1)
+
+    def run():
+        p = orchestrator.Pipeline()
+        for i in range(6):
+            p.add(f"leak.{i}", lambda r, i=i: spark.range(10 + i).count())
+        assert p.run()["status"] == "succeeded"
+
+    base = py4j_threads()
+    counts = []
+    for _ in range(5):
+        run()
+        counts.append(py4j_threads(at_most=base))
+    assert max(counts) <= base, (base, counts)
 
 
 def test_mulaw_codec_properties():
